@@ -9,7 +9,10 @@ Nodes are normalized surface keys (hashed to int64); edges come from
   (b) exact normalized-surface equality between extracted surfaces and
       aliases (implicit: same node id).
 Shared aliases between two entities merge their clusters — exactly the
-behavior CC is for.
+behavior CC is for.  Every edge is a dictionary edge, so the components
+are a property of the dictionary: ``alias_components`` computes them
+once, and canonicalizing a crawl is a broadcast join of its surfaces
+against that table (``canonicalize_entities``).
 
 Algorithm: alternating large-star / small-star (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SOCC'14 — public), all
@@ -35,12 +38,14 @@ def _canon_edges(edges: DataFrame) -> DataFrame:
     return e.where(F.col("src") != F.col("dst")).distinct()
 
 
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
+def row_fingerprint(df: DataFrame) -> tuple[int, int]:
+    """(row count, order-independent hash sum over all columns) in one
+    aggregation job — a multiset fingerprint of ``df``'s rows."""
+    row = df.agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(
             F.pmod(
-                F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")),
+                F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")),
                 F.lit(2**62),
             ).cast("long"),
             F.lit(0),
@@ -210,30 +215,30 @@ def connected_components(
         # that reuses state_dir after the upstream edge set changed
         # must restart, or it silently resumes round snapshots of the
         # OLD graph and emits components for edges that no longer
-        # exist.  Round 0 records _fingerprint(canonicalized input);
+        # exist.  Round 0 records row_fingerprint(canonicalized input);
         # a resume recomputes it (one aggregation over the input — the
         # price of not trusting the directory name) and restarts on
         # mismatch or when no fingerprint was recorded.
         stored = _read_input_fp(state_dir)
-        if stored is None or stored != _fingerprint(_canon_edges(edges)):
+        if stored is None or stored != row_fingerprint(_canon_edges(edges)):
             _clear_rounds(state_dir)
             last = -1
     if last >= 0:
         e = spark.read.parquet(f"{state_dir}/round_{last:04d}")
         start = last + 1
-        prev = _fingerprint(e)
+        prev = row_fingerprint(e)
     else:
         e = cut(_canon_edges(edges), 0)
         start = 1
         # fingerprint of the cut == fingerprint of the canonical input
         # (same rows, order-independent sum), so the fresh path records
         # the input fingerprint with zero extra jobs
-        prev = _fingerprint(e)
+        prev = row_fingerprint(e)
         if state_dir is not None:
             _write_input_fp(state_dir, prev)
     for rnd in range(start, start + max_iter):
         e = cut(_canon_edges(_small_star(_large_star(e))), rnd)
-        cur = _fingerprint(e)
+        cur = row_fingerprint(e)
         if cur == prev:
             break
         prev = cur
@@ -273,21 +278,57 @@ def alias_edges(alias_dim: DataFrame) -> DataFrame:
     )
 
 
+def alias_components(
+    alias_dim: DataFrame, cc_state_dir: str | None = None
+) -> DataFrame:
+    """The dictionary's clustering: (node, component,
+    cluster_canonical_id) for every distinct alias node.
+
+    Depends only on the alias dictionary (and the tokenizer behind its
+    ``norm_key``), never on a crawl — ``KgPipeline`` stores it as a
+    versioned lakehouse dimension and rebuilds it only when that input
+    changes.  ``cluster_canonical_id`` is the smallest dictionary id in
+    the component.  ``cc_state_dir`` routes the CC loop through
+    resumable parquet round snapshots (driver-loss-safe; see
+    ``connected_components``); default is per-round localCheckpoint."""
+    comp = connected_components(alias_edges(alias_dim), state_dir=cc_state_dir)
+    # aliases whose node is its entity's hub and has no other alias
+    # carry no edge: they are singleton components
+    members = (
+        alias_dim.select(node_id("norm_key").alias("node"), "canonical_id")
+        .join(comp, "node", "left")
+        .withColumn("component", F.coalesce("component", F.col("node")))
+    )
+    best = members.groupBy("component").agg(
+        F.min("canonical_id").alias("cluster_canonical_id")
+    )
+    return (
+        members.select("node", "component").distinct()
+        .join(best, "component")
+        .select("node", "component", "cluster_canonical_id")
+    )
+
+
 def canonicalize_entities(
     linked_triples: DataFrame,
     alias_dim: DataFrame,
     extractor_bc,
-    cc_state_dir: str | None = None,
+    components: DataFrame | None = None,
 ) -> DataFrame:
     """Assign a cluster id to every distinct subject/object surface.
 
-    Returns (norm_key, node, component, canonical_id) — canonical_id is
-    the smallest linked dictionary id in the component (null for
-    literal-only clusters).  ``cc_state_dir`` routes the CC loop
-    through resumable parquet round snapshots (driver-loss-safe; see
-    ``connected_components``); default is per-round localCheckpoint."""
+    Returns (component, node, norm_key, cluster_canonical_id) —
+    cluster_canonical_id is the smallest linked dictionary id in the
+    component (null for literal-only clusters).  A surface joins the
+    dictionary's components by node id (a surface that exactly matches
+    an alias shares its node), broadcast at dictionary scale; any other
+    surface is its own singleton component.  ``components`` is a
+    prebuilt ``alias_components(alias_dim)`` (the pipeline reads it
+    from the lake); without it the components are built here."""
     from deepie_spark.operators.linking import norm_key_udf
 
+    if components is None:
+        components = alias_components(alias_dim)
     norm = norm_key_udf(extractor_bc)
     surfaces = (
         linked_triples.select(norm("subject").alias("norm_key"))
@@ -295,22 +336,11 @@ def canonicalize_entities(
         .where(F.col("norm_key").isNotNull())
         .distinct()
     )
-    surf_nodes = surfaces.withColumn("node", node_id("norm_key"))
-    # surfaces that exactly match an alias share the alias node id, so
-    # alias-star edges connect them transitively
-    edges = alias_edges(alias_dim)
-    # self-edges keep isolated surfaces as singleton components
-    comp = connected_components(edges, state_dir=cc_state_dir)
-    out = surf_nodes.join(comp, "node", "left").withColumn(
-        "component", F.coalesce("component", F.col("node"))
-    )
-    best_alias = (
-        alias_dim.select(
-            node_id("norm_key").alias("node"), "canonical_id"
+    return (
+        surfaces.withColumn("node", node_id("norm_key"))
+        .join(F.broadcast(components), "node", "left")
+        .select(
+            F.coalesce("component", F.col("node")).alias("component"),
+            "node", "norm_key", "cluster_canonical_id",
         )
-        .join(comp, "node", "left")
-        .withColumn("component", F.coalesce("component", F.col("node")))
-        .groupBy("component")
-        .agg(F.min("canonical_id").alias("cluster_canonical_id"))
     )
-    return out.join(best_alias, "component", "left")

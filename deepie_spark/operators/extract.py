@@ -21,6 +21,8 @@ byte-identical per url, independent of Arrow batch boundaries.
 
 from __future__ import annotations
 
+import hashlib
+import json
 from collections.abc import Iterator
 
 import pandas as pd
@@ -111,6 +113,17 @@ class PageExtractor:
             alias, self.tokenizer, self.max_seq_length
         )
         return toks
+
+    def tokenizer_identity(self) -> str:
+        """Hash of everything besides the text that ``_alias_tokens``
+        depends on (vocab, max_seq_length, max_word_chars): two
+        extractors with the same identity give every alias the same
+        normalized key."""
+        tok = self.tokenizer
+        blob = json.dumps(
+            [sorted(tok.vocab.items()), self.max_seq_length, tok.max_word_chars]
+        )
+        return hashlib.sha256(blob.encode()).hexdigest()
 
     # ---- single-row oracle ------------------------------------------------
 

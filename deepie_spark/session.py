@@ -134,7 +134,8 @@ def get_spark(
         # a compact parquet input packs into ~1 task per core — a
         # single wave, so the job's wall time is its slowest task and
         # every early-finishing core idles (measured occupancy 0.78 on
-        # the replicated-corpus extraction).  3 waves keeps stragglers
+        # the replicated-corpus extraction).  6 splits per shuffle
+        # partition (several waves per core) keeps stragglers
         # amortized; maxPartitionBytes still caps split size for big
         # inputs, so this only bites when the scan would otherwise
         # under-parallelize.

@@ -75,11 +75,15 @@ class Lakehouse:
     def _pointer(self, name: str) -> Path:
         return self._table_dir(name) / "_VERSION"
 
-    def current_version(self, name: str) -> int | None:
+    def _meta(self, name: str) -> dict | None:
         p = self._pointer(name)
         if not p.exists():
             return None
-        return int(json.loads(p.read_text())["version"])
+        return json.loads(p.read_text())
+
+    def current_version(self, name: str) -> int | None:
+        meta = self._meta(name)
+        return None if meta is None else int(meta["version"])
 
     def layout(self, name: str) -> dict | None:
         """Physical-layout metadata recorded at commit time (None for
@@ -88,10 +92,15 @@ class Lakehouse:
         :meth:`merge_upsert_bucketed`.  The Iceberg analogue is the
         table's partition spec — it travels with the table, so a later
         writer cannot silently merge in a different hash space."""
-        p = self._pointer(name)
-        if not p.exists():
-            return None
-        return json.loads(p.read_text()).get("layout")
+        return (self._meta(name) or {}).get("layout")
+
+    def key(self, name: str) -> dict | None:
+        """Content key recorded by ``write_stage(..., key=...)`` for the
+        current version (None if none was given): what the table was
+        derived from, so a caller can decide to reuse it by reading this
+        one pointer file, with no Spark job.  The Iceberg analogue is a
+        snapshot summary property."""
+        return (self._meta(name) or {}).get("key")
 
     def _data_path(self, name: str, version: int) -> Path:
         return self._table_dir(name) / f"v={version}"
@@ -130,11 +139,14 @@ class Lakehouse:
         )
         pq.write_table(table, d / f"part-{uuid.uuid4().hex}.parquet")
 
-    def _commit(self, name: str, version: int, layout: dict | None = None) -> None:
+    def _commit(self, name: str, version: int, layout: dict | None = None,
+                key: dict | None = None) -> None:
         tmp = self._pointer(name).with_suffix(f".tmp-{uuid.uuid4().hex[:8]}")
         meta = {"version": version, "ts": time.time()}
         if layout:
             meta["layout"] = layout
+        if key:
+            meta["key"] = key
         tmp.write_text(json.dumps(meta))
         os.replace(tmp, self._pointer(name))  # atomic pointer swap
 
@@ -147,9 +159,11 @@ class Lakehouse:
         run_id: str = "adhoc",
         partition_by: list[str] | None = None,
         with_part_lineage: bool = True,
+        key: dict | None = None,
     ) -> int:
         """Write a new version of a stage table + lineage rows.
-        Returns the committed version number."""
+        ``key`` (JSON-serializable) is stored in the version pointer and
+        read back by :meth:`key`.  Returns the committed version number."""
         t0 = time.time()
         lay = self.layout(name)
         if lay and lay.get("bucketed"):
@@ -207,7 +221,7 @@ class Lakehouse:
                     for r in part_rows
                 ],
             )
-        self._commit(name, v)
+        self._commit(name, v, key=key)
         return v
 
     def lineage(self) -> DataFrame:
@@ -217,8 +231,10 @@ class Lakehouse:
         return self.spark.read.parquet(str(self.root / "_lineage_parts"))
 
     def stage_done(self, name: str, run_id: str) -> bool:
-        """Idempotent-resume check: stage committed by this run (or any
-        prior run) with a readable current version."""
+        """Idempotent-resume check: the current version of the stage was
+        committed by ``run_id``.  A version written by another run (an
+        earlier crawl over other pages) does not count: resuming from it
+        would re-use that crawl's output."""
         if not self.exists(name):
             return False
         try:
@@ -227,7 +243,10 @@ class Lakehouse:
             return False
         v = self.current_version(name)
         return (
-            lin.where((F.col("stage") == name) & (F.col("version") == v)).count() > 0
+            lin.where(
+                (F.col("stage") == name) & (F.col("version") == v)
+                & (F.col("run_id") == run_id)
+            ).count() > 0
         )
 
     # ---- bucketed tables (co-located joins) ----

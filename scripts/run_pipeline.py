@@ -72,6 +72,7 @@ def main(argv=None) -> int:
         "stages_run": res.stages_run,
         "stages_skipped": res.stages_skipped,
         "wall_s": {k: round(v, 2) for k, v in res.wall_s.items()},
+        "alias_components": res.alias_components,
         "kg_triples": kg.count(),
         "kg_entities": pipe.lake.read("kg_entities").count(),
     }

@@ -1,6 +1,11 @@
 import random
 
-from deepie_spark.operators.canonicalize import connected_components
+from deepie_spark.operators.canonicalize import (
+    alias_components,
+    canonicalize_entities,
+    connected_components,
+    node_id,
+)
 
 
 def _cc_oracle(edges):
@@ -166,3 +171,74 @@ def test_cc_state_dir_rejects_stale_snapshots(spark, tmp_path):
     assert got2 == got
     for d in rounds:
         assert os.path.getmtime(os.path.join(state, d, "_SUCCESS")) == mtimes[d]
+
+
+def _alias_oracle(rows):
+    """(node, canonical_id) alias rows -> {node: (component,
+    cluster_canonical_id)}: union-find over nodes sharing an entity,
+    component = min node, cluster id = min canonical_id."""
+    by_cid = {}
+    for node, cid in rows:
+        by_cid.setdefault(cid, []).append(node)
+    edges = [(n, n) for n, _ in rows]
+    for nodes in by_cid.values():
+        edges += [(nodes[0], n) for n in nodes[1:]]
+    comp = _cc_oracle(edges)
+    best = {}
+    for node, cid in rows:
+        best[comp[node]] = min(cid, best.get(comp[node], cid))
+    return {n: (comp[n], best[comp[n]]) for n in comp}
+
+
+def test_alias_components_match_union_find(spark):
+    """The dictionary dimension: every alias node's component and the
+    component's smallest canonical_id, with shared keys bridging
+    entities and single-alias entities as singletons."""
+    rng = random.Random(5)
+    rows = [(f"k{rng.randrange(60)}", rng.randrange(25)) for _ in range(80)]
+    alias_dim = spark.createDataFrame(rows, "norm_key string, canonical_id bigint")
+    nodes = [
+        (r["node"], r["canonical_id"])
+        for r in alias_dim.select(
+            node_id("norm_key").alias("node"), "canonical_id"
+        ).collect()
+    ]
+    got = {
+        r["node"]: (r["component"], r["cluster_canonical_id"])
+        for r in alias_components(alias_dim).collect()
+    }
+    assert alias_components(alias_dim).count() == len(got)  # one row per node
+    assert got == _alias_oracle(nodes)
+
+
+def test_canonicalize_entities_joins_the_dimension(spark, extractor):
+    """Surfaces take their alias node's component; a surface matching
+    no alias is its own component with no canonical id."""
+    from deepie_spark.operators.linking import alias_dim_with_key
+    from deepie_spark.sources.synth import corpus_dataframes
+
+    bc = spark.sparkContext.broadcast(extractor)
+    _, _, alias_df = corpus_dataframes(spark, 1)
+    alias_dim = alias_dim_with_key(alias_df, bc)
+    surfaces = [r["alias"] for r in alias_df.limit(5).collect()]
+    linked = spark.createDataFrame(
+        [(s, {"@value": "1999"}) for s in surfaces],
+        "subject string, object map<string,string>",
+    )
+    comps = alias_components(alias_dim)
+    out = canonicalize_entities(linked, alias_dim, bc, components=comps)
+    assert out.columns == ["component", "node", "norm_key", "cluster_canonical_id"]
+    dim = {
+        r["node"]: (r["component"], r["cluster_canonical_id"])
+        for r in comps.collect()
+    }
+    rows = out.collect()
+    assert len(rows) == len({r["norm_key"] for r in rows})
+    literals = [r for r in rows if r["node"] not in dim]
+    assert len(literals) == 1 and len(rows) > 1  # only the date
+    for r in rows:
+        want = dim.get(r["node"], (r["node"], None))
+        assert (r["component"], r["cluster_canonical_id"]) == want
+    # without a prebuilt dimension the same rows come out
+    fresh = canonicalize_entities(linked, alias_dim, bc)
+    assert sorted(fresh.collect()) == sorted(rows)

@@ -31,6 +31,18 @@ def test_stage_done_resume_check(spark, lake):
     assert not lake.stage_done("t3", "r1")
     lake.write_stage(spark.range(5), "t3", run_id="r1")
     assert lake.stage_done("t3", "r1")
+    # another run's commit is not this run's progress: a follow-up crawl
+    # must not resume from the previous crawl's stage output
+    assert not lake.stage_done("t3", "r2")
+
+
+def test_write_stage_key_in_version_pointer(spark, lake):
+    assert lake.key("t4") is None
+    lake.write_stage(spark.range(5), "t4", key={"alias_rows": 5, "tokenizer": "x"})
+    assert lake.key("t4") == {"alias_rows": 5, "tokenizer": "x"}
+    # the key belongs to the version that recorded it
+    lake.write_stage(spark.range(6), "t4")
+    assert lake.key("t4") is None
 
 
 def test_merge_upsert_semantics(spark, lake):

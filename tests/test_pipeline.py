@@ -1,5 +1,5 @@
-"""Full pipeline: run, P/R vs gold, idempotent resume, CC merge of
-shared-alias surfaces."""
+"""Full pipeline: run, P/R vs gold, idempotent resume, follow-up crawls,
+the alias_components dimension, CC merge of shared-alias surfaces."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,10 +10,32 @@ from deepie_spark.sources.synth import corpus_dataframes
 
 N = 120
 
+# scalar columns that pin each table's rows
+TABLE_COLS = {
+    "kg_triples": ["triple_key", "url", "subject", "predicate", "object_key",
+                   "subject_id", "object_id"],
+    "kg_entities": ["component", "canonical_id", "representative", "n_surfaces"],
+    "entity_clusters": ["component", "node", "norm_key", "cluster_canonical_id"],
+}
+
+
+def table_rows(df, table):
+    return sorted(tuple(r) for r in df.select(*TABLE_COLS[table]).collect())
+
 
 @pytest.fixture(scope="module")
 def corpus_dfs(spark):
     return corpus_dataframes(spark, N)
+
+
+@pytest.fixture(scope="module")
+def one_crawl(spark, extractor, corpus_dfs, tmp_path_factory):
+    """A lake built by one crawl over all N pages."""
+    pages_df, _gold, alias_df = corpus_dfs
+    root = tmp_path_factory.mktemp("lake_one")
+    pipe = KgPipeline(spark, str(root), extractor, run_id="one")
+    pipe.run(pages_df, alias_df)
+    return pipe
 
 
 def test_pipeline_end_to_end_and_resume(spark, extractor, corpus_dfs, tmp_path_factory):
@@ -36,18 +58,52 @@ def test_pipeline_end_to_end_and_resume(spark, extractor, corpus_dfs, tmp_path_f
     assert pipe.lake.read("kg_triples").count() == n_before
 
 
-def test_pipeline_incremental_merge(spark, extractor, corpus_dfs, tmp_path_factory):
-    pages_df, gold_df, alias_df = corpus_dfs
+def test_pipeline_incremental_merge(spark, extractor, corpus_dfs, one_crawl,
+                                    tmp_path_factory, monkeypatch):
+    """A follow-up crawl under a new run_id runs every stage (resume
+    does not pick up the first crawl's output), reuses the dictionary's
+    alias_components without running connected components, and leaves
+    the same graph as one crawl over the same pages."""
+    from deepie_spark.operators import canonicalize
+    from deepie_spark.operators.linking import alias_dim_with_key
+
+    cc_calls = []
+    real_cc = canonicalize.connected_components
+
+    def spy_cc(*a, **kw):
+        cc_calls.append(1)
+        return real_cc(*a, **kw)
+
+    monkeypatch.setattr(canonicalize, "connected_components", spy_cc)
+    pages_df, _gold, alias_df = corpus_dfs
     root = tmp_path_factory.mktemp("lake2")
     first = pages_df.limit(60)
     pipe1 = KgPipeline(spark, str(root), extractor, run_id="crawl1")
-    pipe1.run(first, alias_df)
-    n1 = pipe1.lake.read("kg_triples").count()
+    res1 = pipe1.run(first, alias_df)
+    assert res1.alias_components == {"version": 1, "built": True}
+    assert len(cc_calls) == 1
 
     pipe2 = KgPipeline(spark, str(root), extractor, run_id="crawl2")
-    pipe2.run(pages_df, alias_df)  # includes the first 60 again
-    n2 = pipe2.lake.read("kg_triples").count()
-    assert n2 >= n1
+    res2 = pipe2.run(pages_df, alias_df)  # includes the first 60 again
+    assert not res2.stages_skipped
+    assert res2.alias_components == {"version": 1, "built": False}
+    assert len(cc_calls) == 1  # the second crawl ran no CC
+    assert {"alias_components", "kg_triples", "kg_entities"} <= set(res1.wall_s)
+    assert {"kg_triples", "kg_entities"} <= set(res2.wall_s)
+    assert "alias_components" not in res2.wall_s
+
+    # crawl 2 covers all N pages: its graph equals a one-crawl lake's
+    for table in ("kg_triples", "kg_entities", "entity_clusters"):
+        assert table_rows(pipe2.lake.read(table), table) == table_rows(
+            one_crawl.lake.read(table), table), table
+    # ... and its clusters equal CC run for this crawl alone
+    alias_dim = alias_dim_with_key(alias_df, pipe2.extractor_bc)
+    per_crawl = canonicalize.canonicalize_entities(
+        pipe2.lake.read("linked"), alias_dim, pipe2.extractor_bc
+    )
+    assert table_rows(pipe2.lake.read("entity_clusters"), "entity_clusters") == \
+        table_rows(per_crawl, "entity_clusters")
+    assert len(cc_calls) == 2
     # no duplicate triple keys after the second MERGE
     dup = (
         pipe2.lake.read("kg_triples")
@@ -56,12 +112,48 @@ def test_pipeline_incremental_merge(spark, extractor, corpus_dfs, tmp_path_facto
     assert dup == 0
 
 
-def test_entities_table_clusters(spark, extractor, corpus_dfs, tmp_path_factory):
-    pages_df, _, alias_df = corpus_dfs
-    root = tmp_path_factory.mktemp("lake3")
-    pipe = KgPipeline(spark, str(root), extractor, run_id="r1")
-    pipe.run(pages_df, alias_df)
-    ents = pipe.lake.read("kg_entities")
+def test_alias_components_versioned_by_dictionary_and_tokenizer(
+        spark, extractor, world, corpus_dfs, tmp_path):
+    """The dimension's key is the alias rows plus the tokenizer: the
+    same key reuses the committed version, a changed alias row or a
+    different max_seq_length builds a new one."""
+    from deepie_spark.config.schema import SYNTH_SCHEMA
+    from deepie_spark.operators.canonicalize import alias_components
+    from deepie_spark.operators.extract import PageExtractor
+    from deepie_spark.operators.linking import alias_dim_with_key
+
+    _pages, _gold, alias_df = corpus_dfs
+    lake = str(tmp_path / "lake")
+    pipe = KgPipeline(spark, lake, extractor, run_id="d1")
+    comps1, info = pipe.alias_components(alias_df)
+    assert info == {"version": 1, "built": True}
+    assert pipe.alias_components(alias_df)[1] == {"version": 1, "built": False}
+
+    # move the first alias to the last row's entity
+    rows = alias_df.collect()
+    moved = rows[-1]["canonical_id"]
+    assert rows[0]["canonical_id"] != moved
+    changed = spark.createDataFrame(
+        [(r["alias"], moved if i == 0 else r["canonical_id"],
+          r["entity_type"], r["weight"]) for i, r in enumerate(rows)],
+        alias_df.schema,
+    )
+    comps2, info = pipe.alias_components(changed)
+    assert info == {"version": 2, "built": True}
+    cols = ["node", "component", "cluster_canonical_id"]
+    got = sorted(comps2.select(*cols).collect())
+    fresh = alias_components(alias_dim_with_key(changed, pipe.extractor_bc))
+    assert got == sorted(fresh.select(*cols).collect())
+    assert got != sorted(comps1.select(*cols).collect())
+
+    short = PageExtractor(SYNTH_SCHEMA, world.alias_rows, max_seq_length=128,
+                          with_encoder=False)
+    pipe_short = KgPipeline(spark, lake, short, run_id="d2")
+    assert pipe_short.alias_components(changed)[1] == {"version": 3, "built": True}
+
+
+def test_entities_table_clusters(one_crawl):
+    ents = one_crawl.lake.read("kg_entities")
     assert ents.count() > 0
     # every cluster has a representative; clusters with dictionary hits
     # carry a canonical_id

@@ -193,3 +193,24 @@ def test_jaccard_verify_stage_no_generate(spark):
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
     assert "array_intersect" in p  # the pair-local verify really runs
+
+
+def test_entity_clusters_broadcasts_alias_components(spark, extractor, tmp_path):
+    """Per-crawl canonicalization is one broadcast join of the crawl's
+    surfaces against the dictionary dimension: no CC, no shuffle join."""
+    from deepie_spark.operators.canonicalize import canonicalize_entities
+
+    path = str(tmp_path / "alias_components")
+    spark.createDataFrame(
+        [(1, 1, 7)], "node bigint, component bigint, cluster_canonical_id bigint"
+    ).write.parquet(path)
+    linked = spark.createDataFrame(
+        [("Ada Lovelace", {"@value": "1815"})],
+        "subject string, object map<string,string>",
+    )
+    bc = spark.sparkContext.broadcast(extractor)
+    # alias_dim is not read when the dimension is given
+    p = plan_of(canonicalize_entities(
+        linked, None, bc, components=spark.read.parquet(path)))
+    assert "BroadcastHashJoin" in p
+    assert "SortMergeJoin" not in p
