@@ -4,8 +4,8 @@ DeepIE reference (loujie0822/DeepIE).
 
 Pipeline (staged DataFrame passes, each checkpointable):
 
-    pages -> texts -> tokens -> mentions -> subjects -> po -> raw_triples
-          -> triples -> linked -> canonical -> kg (MERGE)
+    pages -> texts -> tokens -> mentions, triples -> linked
+          -> entity_clusters -> kg (MERGE)
 
 Everything is DataFrame/Catalyst-first; Python appears only inside
 Arrow-batched pandas UDFs (never per-row Python), per the build contract.
@@ -21,7 +21,6 @@ _EXPORTS = {
     "PageExtractor": "deepie_spark.operators.extract",
     "extract_triples_fused": "deepie_spark.operators.extract",
     "extract_triples_fused_dedup": "deepie_spark.operators.extract",
-    "extract_triples_staged": "deepie_spark.operators.extract",
     "StlExtractor": "deepie_spark.operators.etl_stl",
     "detect_mentions": "deepie_spark.operators.linking",
     "link_triples": "deepie_spark.operators.linking",

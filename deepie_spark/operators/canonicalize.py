@@ -281,16 +281,23 @@ def alias_edges(alias_dim: DataFrame) -> DataFrame:
 def alias_components(
     alias_dim: DataFrame, cc_state_dir: str | None = None
 ) -> DataFrame:
-    """The dictionary's clustering: (node, component,
-    cluster_canonical_id) for every distinct alias node.
+    """The dictionary's clustering and link candidates: (node,
+    component, cluster_canonical_id, norm_key, canonical_id,
+    entity_type) for every distinct alias node.
 
-    Depends only on the alias dictionary (and the tokenizer behind its
+    ``alias_dim`` is ``alias_dim_with_key`` output.  The result depends
+    only on the alias dictionary (and the tokenizer behind its
     ``norm_key``), never on a crawl — ``KgPipeline`` stores it as a
     versioned lakehouse dimension and rebuilds it only when that input
     changes.  ``cluster_canonical_id`` is the smallest dictionary id in
-    the component.  ``cc_state_dir`` routes the CC loop through
-    resumable parquet round snapshots (driver-loss-safe; see
-    ``connected_components``); default is per-round localCheckpoint."""
+    the component; ``canonical_id``/``entity_type`` are the node's
+    rank-1 link candidate (``link_triples`` joins against them).
+    ``cc_state_dir`` routes the CC loop through resumable parquet round
+    snapshots (driver-loss-safe; see ``connected_components``); default
+    is per-round localCheckpoint."""
+    # the edges, the members and the link candidates all read alias_dim:
+    # evaluate its norm UDF and rank window once, not three times
+    alias_dim = alias_dim.localCheckpoint()
     comp = connected_components(alias_edges(alias_dim), state_dir=cc_state_dir)
     # aliases whose node is its entity's hub and has no other alias
     # carry no edge: they are singleton components
@@ -302,10 +309,16 @@ def alias_components(
     best = members.groupBy("component").agg(
         F.min("canonical_id").alias("cluster_canonical_id")
     )
+    links = alias_dim.where(F.col("link_rank") == 1).select(
+        node_id("norm_key").alias("node"), "norm_key", "canonical_id",
+        "entity_type",
+    )
     return (
         members.select("node", "component").distinct()
         .join(best, "component")
-        .select("node", "component", "cluster_canonical_id")
+        .join(links, "node")
+        .select("node", "component", "cluster_canonical_id", "norm_key",
+                "canonical_id", "entity_type")
     )
 
 
@@ -319,26 +332,29 @@ def canonicalize_entities(
 
     Returns (component, node, norm_key, cluster_canonical_id) —
     cluster_canonical_id is the smallest linked dictionary id in the
-    component (null for literal-only clusters).  A surface joins the
-    dictionary's components by node id (a surface that exactly matches
-    an alias shares its node), broadcast at dictionary scale; any other
-    surface is its own singleton component.  ``components`` is a
-    prebuilt ``alias_components(alias_dim)`` (the pipeline reads it
-    from the lake); without it the components are built here."""
-    from deepie_spark.operators.linking import norm_key_udf
-
+    component (null for literal-only clusters).  Surfaces are the
+    ``subject_norm``/``object_norm`` keys ``link_triples`` computed, so
+    this runs no Python.  A surface joins the dictionary's components
+    by node id (a surface that exactly matches an alias shares its
+    node), broadcast at dictionary scale; any other surface is its own
+    singleton component.  ``components`` is a prebuilt
+    ``alias_components(alias_dim)`` (the pipeline reads it from the
+    lake); without it the components are built here.  ``extractor_bc``
+    is unused: the keys are already in ``linked_triples``."""
     if components is None:
         components = alias_components(alias_dim)
-    norm = norm_key_udf(extractor_bc)
     surfaces = (
-        linked_triples.select(norm("subject").alias("norm_key"))
-        .union(linked_triples.select(norm(F.col("object")["@value"]).alias("norm_key")))
+        linked_triples.select(F.col("subject_norm").alias("norm_key"))
+        .union(linked_triples.select(F.col("object_norm").alias("norm_key")))
         .where(F.col("norm_key").isNotNull())
         .distinct()
     )
     return (
         surfaces.withColumn("node", node_id("norm_key"))
-        .join(F.broadcast(components), "node", "left")
+        .join(
+            F.broadcast(components.select("node", "component", "cluster_canonical_id")),
+            "node", "left",
+        )
         .select(
             F.coalesce("component", F.col("node")).alias("component"),
             "node", "norm_key", "cluster_canonical_id",

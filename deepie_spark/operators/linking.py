@@ -22,6 +22,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 MENTIONS_DDL = (
     "url string, mention string, tok_start int, tok_end int, "
@@ -107,34 +108,65 @@ def alias_dim_with_key(alias_df: DataFrame, extractor_bc) -> DataFrame:
     )
 
 
-def link_surfaces(
-    surfaces_df: DataFrame, alias_dim: DataFrame, surface_col: str,
-    extractor_bc,
-) -> DataFrame:
-    """Attach (canonical_id, entity_type) to a surface column via exact
-    normalized-alias match; best candidate only.  Broadcast join — the
-    big side never shuffles."""
-    norm = norm_key_udf(extractor_bc)
-    best = alias_dim.filter(F.col("link_rank") == 1).select(
-        F.col("norm_key"),
-        F.col("canonical_id").alias(f"{surface_col}_canonical_id"),
-        F.col("entity_type").alias(f"{surface_col}_entity_type"),
+def link_candidates(alias_dim: DataFrame) -> DataFrame:
+    """(norm_key, canonical_id) of each key's rank-1 candidate.
+    ``alias_dim`` is either ``alias_dim_with_key`` output or the
+    ``alias_components`` dimension, which stores only those rows."""
+    if "link_rank" in alias_dim.columns:
+        alias_dim = alias_dim.where(F.col("link_rank") == 1)
+    return alias_dim.select("norm_key", "canonical_id")
+
+
+def link_keys(triples_df: DataFrame, extractor_bc) -> DataFrame:
+    """Triples + ``subject_norm`` and ``object_norm`` (the normalized
+    keys of ``subject`` and ``object['@value']``), both computed in ONE
+    Python pass over the triples.  Each key equals ``norm_key_udf`` of
+    its surface (tested), so it matches the dictionary's keys."""
+    schema = StructType(
+        triples_df.schema.fields
+        + [StructField("subject_norm", StringType()),
+           StructField("object_norm", StringType())]
     )
-    return surfaces_df.withColumn(f"_{surface_col}_key", norm(surface_col)).join(
-        F.broadcast(best),
-        F.col(f"_{surface_col}_key") == best.norm_key,
-        "left",
-    ).drop("norm_key", f"_{surface_col}_key")
+
+    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ex = extractor_bc.value
+
+        def norm(x):
+            return None if x is None else " ".join(ex._alias_tokens(x))
+
+        for pdf in it:
+            yield pdf.assign(
+                subject_norm=[norm(s) for s in pdf["subject"]],
+                object_norm=[
+                    None if o is None else norm(dict(o).get("@value"))
+                    for o in pdf["object"]
+                ],
+            )
+
+    return triples_df.mapInPandas(kernel, schema)
 
 
 def link_triples(triples_df: DataFrame, alias_dim: DataFrame, extractor_bc) -> DataFrame:
     """Triples -> linked triples: subject_id and object_id (null for
-    literals like dates/numbers)."""
-    out = link_surfaces(triples_df, alias_dim, "subject", extractor_bc)
-    out = out.withColumn("object_value", F.col("object")["@value"])
-    out = link_surfaces(out, alias_dim, "object_value", extractor_bc)
-    return (
-        out.withColumnRenamed("subject_canonical_id", "subject_id")
-        .withColumnRenamed("object_value_canonical_id", "object_id")
-        .drop("subject_entity_type", "object_value_entity_type")
+    literals like dates/numbers), plus the ``subject_norm`` and
+    ``object_norm`` link keys that canonicalization reuses.  The keys
+    come from one Python pass; each id is a broadcast join against the
+    dictionary's rank-1 candidates, so the big side never shuffles."""
+    best = link_candidates(alias_dim)
+
+    def ids(side: str) -> DataFrame:
+        return F.broadcast(
+            best.withColumnRenamed("norm_key", f"{side}_norm")
+            .withColumnRenamed("canonical_id", f"{side}_id")
+        )
+
+    out = (
+        link_keys(triples_df, extractor_bc)
+        .withColumn("object_value", F.col("object")["@value"])
+        .join(ids("subject"), "subject_norm", "left")
+        .join(ids("object"), "object_norm", "left")
+    )
+    return out.select(
+        *triples_df.columns, "subject_id", "object_value", "object_id",
+        "subject_norm", "object_norm",
     )

@@ -3,17 +3,26 @@
 Stage DAG (each stage a lakehouse table, resumable):
 
     pages -> texts -> tokens -> triples -> linked -> entity_clusters
-                         \\-> mentions          |           ^          |
-    aliases -> alias_components ---------------|-----------+          |
-               (dictionary dimension)          v                      v
-                                 kg_triples <- MERGE    kg_entities <- MERGE
+                         \\-> mentions       ^  |          ^       |
+    aliases -> alias_components ------------+--|----------+       |
+               (dictionary dimension)          v                  v
+                                          kg_triples         kg_entities
+                                            MERGE              MERGE
 
-``alias_components`` is the alias dictionary's connected components,
-(node, component, cluster_canonical_id) per alias node.  It depends only
-on the dictionary, so it is keyed by a fingerprint of the raw alias rows
-plus the extractor's tokenizer identity, stored in its version pointer,
-and rebuilt only when that key changes; a follow-up crawl with the same
-dictionary runs no connected-components job.
+Every crawl stage runs at most one Python pass: ``texts``, ``tokens``
+and ``mentions`` one page-local kernel each; ``triples`` one page-local
+kernel over the materialized ``tokens`` (no exchange); ``linked`` one
+pass that computes both link keys, then broadcast joins; and
+``entity_clusters`` none — it reuses ``linked``'s keys.
+
+``alias_components`` is the alias dictionary's side of linking and
+canonicalization: per alias node its connected component, the
+component's canonical id and the node's rank-1 link candidate.  It
+depends only on the dictionary, so it is keyed by a fingerprint of the
+raw alias rows plus the extractor's tokenizer identity, stored in its
+version pointer, and rebuilt only when that key changes; a follow-up
+crawl with the same dictionary runs no connected-components job and no
+Python over the dictionary.
 
 Lifecycle mirrors the reference flagship run (SURVEY.md §3.1) with the
 pickle cache replaced by fingerprinted stage tables.  ``run()`` is
@@ -50,10 +59,10 @@ class PipelineResult:
     stages_run: list[str] = field(default_factory=list)
     stages_skipped: list[str] = field(default_factory=list)
     # seconds per stage and MERGE this run executed; a dimension build
-    # (``alias_components``) is also inside ``entity_clusters``' time
+    # (``alias_components``) is also inside ``linked``'s time
     wall_s: dict[str, float] = field(default_factory=dict)
     # {"version": v, "built": bool} for the alias_components dimension
-    # entity_clusters joined against; None when that stage was resumed
+    # linked and entity_clusters joined against; None when both resumed
     alias_components: dict | None = None
 
 
@@ -88,7 +97,8 @@ class KgPipeline:
         """The ``alias_components`` dimension for ``alias_df``: the
         committed version when its key (alias-row fingerprint, one
         aggregation job, plus tokenizer identity) matches, else a new
-        version built by CC over the alias edges.  Returns the table and
+        version built by CC over the alias edges (the only place a
+        crawl evaluates Python over the dictionary).  Returns the table and
         ``{"version": v, "built": bool}``.  The key covers the
         tokenizer's vocab and settings, not its code."""
         name = "alias_components"
@@ -120,7 +130,6 @@ class KgPipeline:
         pages_df: DataFrame,
         alias_df: DataFrame,
         resume: bool = True,
-        staged_extraction: bool = True,
     ) -> PipelineResult:
         res = PipelineResult()
         bc = self.extractor_bc
@@ -139,33 +148,36 @@ class KgPipeline:
         self._stage(
             "mentions", lambda: detect_mentions(tokens, bc), res, resume
         )
-        if staged_extraction:
-            def _triples():
-                subjects = ex_ops.stage_subjects(tokens, bc)
-                po = ex_ops.stage_po(subjects, bc)
-                return ex_ops.stage_triples(po, bc)
-        else:
-            def _triples():
-                return ex_ops.extract_triples_fused(texts, bc)
-        triples = self._stage("triples", _triples, res, resume)
-
-        alias_dim = alias_dim_with_key(alias_df, bc)
-        linked = self._stage(
-            "linked", lambda: link_triples(triples, alias_dim, bc), res, resume
+        triples = self._stage(
+            "triples", lambda: ex_ops.triples_from_tokens(tokens, bc), res, resume
         )
 
-        def _clusters():
-            t0 = time.time()
-            comps, res.alias_components = self.alias_components(alias_df)
-            if res.alias_components["built"]:
-                res.wall_s["alias_components"] = time.time() - t0
-            return canonicalize_entities(linked, alias_dim, bc, components=comps)
+        dim: list[DataFrame] = []
 
-        clusters = self._stage("entity_clusters", _clusters, res, resume)
+        def components() -> DataFrame:
+            # the dimension, looked up once and only if a stage needs it
+            if not dim:
+                t0 = time.time()
+                comps, res.alias_components = self.alias_components(alias_df)
+                if res.alias_components["built"]:
+                    res.wall_s["alias_components"] = time.time() - t0
+                dim.append(comps)
+            return dim[0]
+
+        linked = self._stage(
+            "linked", lambda: link_triples(triples, components(), bc), res, resume
+        )
+        clusters = self._stage(
+            "entity_clusters",
+            lambda: canonicalize_entities(linked, None, bc, components=components()),
+            res, resume,
+        )
 
         # -- graph materialization (MERGE) --------------------------------
         def _kg_triples():
-            t = linked.withColumn("object_key", obj_key(F.col("object")))
+            t = linked.drop("subject_norm", "object_norm").withColumn(
+                "object_key", obj_key(F.col("object"))
+            )
             return t.withColumn(
                 "triple_key",
                 F.xxhash64("url", "subject", "predicate", "object_key"),

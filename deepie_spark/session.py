@@ -129,19 +129,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("DEEPIE_DRIVER_MEM", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # floor on SCAN parallelism, derived from the session's core
-        # count (scale-adaptive, not a local[32] constant): without it
-        # a compact parquet input packs into ~1 task per core — a
-        # single wave, so the job's wall time is its slowest task and
-        # every early-finishing core idles (measured occupancy 0.78 on
-        # the replicated-corpus extraction).  6 splits per shuffle
-        # partition (several waves per core) keeps stragglers
-        # amortized; maxPartitionBytes still caps split size for big
-        # inputs, so this only bites when the scan would otherwise
-        # under-parallelize.
-        .config(
-            "spark.sql.files.minPartitionNum", str(6 * int(shuffle_partitions))
-        )
+        # no scan-parallelism floor: an idle Python task costs ~0.3 s
     )
     # ship the same pinning into executor-spawned python workers (on a
     # real cluster the driver env doesn't reach executors; in local

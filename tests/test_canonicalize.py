@@ -194,37 +194,51 @@ def test_alias_components_match_union_find(spark):
     """The dictionary dimension: every alias node's component and the
     component's smallest canonical_id, with shared keys bridging
     entities and single-alias entities as singletons."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
     rng = random.Random(5)
     rows = [(f"k{rng.randrange(60)}", rng.randrange(25)) for _ in range(80)]
-    alias_dim = spark.createDataFrame(rows, "norm_key string, canonical_id bigint")
+    # alias_dim_with_key's shape: a type and a rank per key
+    alias_dim = (
+        spark.createDataFrame(rows, "norm_key string, canonical_id bigint")
+        .withColumn("entity_type", F.concat(F.lit("T"), F.col("canonical_id")))
+        .withColumn("link_rank", F.row_number().over(
+            Window.partitionBy("norm_key").orderBy("canonical_id")))
+    )
     nodes = [
         (r["node"], r["canonical_id"])
         for r in alias_dim.select(
             node_id("norm_key").alias("node"), "canonical_id"
         ).collect()
     ]
-    got = {
-        r["node"]: (r["component"], r["cluster_canonical_id"])
-        for r in alias_components(alias_dim).collect()
-    }
-    assert alias_components(alias_dim).count() == len(got)  # one row per node
+    comps = alias_components(alias_dim).collect()
+    got = {r["node"]: (r["component"], r["cluster_canonical_id"]) for r in comps}
+    assert len(comps) == len(got)  # one row per node
     assert got == _alias_oracle(nodes)
+    # each node's link candidate is its key's rank-1 alias
+    links = {(r["norm_key"], r["canonical_id"], r["entity_type"]) for r in comps}
+    first = {}
+    for k, cid in rows:
+        first[k] = min(cid, first.get(k, cid))
+    assert links == {(k, cid, f"T{cid}") for k, cid in first.items()}
 
 
 def test_canonicalize_entities_joins_the_dimension(spark, extractor):
     """Surfaces take their alias node's component; a surface matching
     no alias is its own component with no canonical id."""
-    from deepie_spark.operators.linking import alias_dim_with_key
+    from deepie_spark.operators.linking import alias_dim_with_key, link_keys
     from deepie_spark.sources.synth import corpus_dataframes
 
     bc = spark.sparkContext.broadcast(extractor)
     _, _, alias_df = corpus_dataframes(spark, 1)
     alias_dim = alias_dim_with_key(alias_df, bc)
     surfaces = [r["alias"] for r in alias_df.limit(5).collect()]
-    linked = spark.createDataFrame(
+    # canonicalization reads the link keys link_triples adds
+    linked = link_keys(spark.createDataFrame(
         [(s, {"@value": "1999"}) for s in surfaces],
         "subject string, object map<string,string>",
-    )
+    ), bc)
     comps = alias_components(alias_dim)
     out = canonicalize_entities(linked, alias_dim, bc, components=comps)
     assert out.columns == ["component", "node", "norm_key", "cluster_canonical_id"]

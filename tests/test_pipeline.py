@@ -47,6 +47,10 @@ def test_pipeline_end_to_end_and_resume(spark, extractor, corpus_dfs, tmp_path_f
     assert "triples" in res1.stages_run and not res1.stages_skipped
 
     kg = pipe.lake.read("kg_triples")
+    # linked's link keys stay out of the graph table
+    assert kg.columns == ["url", "subject", "subject_type", "predicate", "object",
+                          "object_type", "subject_id", "object_value", "object_id",
+                          "object_key", "triple_key"]
     prf = M.micro_prf(M.triple_counts(kg, gold_df)).first()
     assert prf["precision"] >= 0.95 and prf["recall"] >= 0.95, dict(prf.asDict())
 
@@ -62,10 +66,12 @@ def test_pipeline_incremental_merge(spark, extractor, corpus_dfs, one_crawl,
                                     tmp_path_factory, monkeypatch):
     """A follow-up crawl under a new run_id runs every stage (resume
     does not pick up the first crawl's output), reuses the dictionary's
-    alias_components without running connected components, and leaves
-    the same graph as one crawl over the same pages."""
+    alias_components without running connected components or the norm
+    UDF over the alias rows, and leaves the same graph as one crawl
+    over the same pages."""
     from deepie_spark.operators import canonicalize
     from deepie_spark.operators.linking import alias_dim_with_key
+    from deepie_spark.plans import pipeline
 
     cc_calls = []
     real_cc = canonicalize.connected_components
@@ -74,20 +80,28 @@ def test_pipeline_incremental_merge(spark, extractor, corpus_dfs, one_crawl,
         cc_calls.append(1)
         return real_cc(*a, **kw)
 
+    key_calls = []
+
+    def spy_key(*a, **kw):
+        key_calls.append(1)
+        return alias_dim_with_key(*a, **kw)
+
     monkeypatch.setattr(canonicalize, "connected_components", spy_cc)
+    monkeypatch.setattr(pipeline, "alias_dim_with_key", spy_key)
     pages_df, _gold, alias_df = corpus_dfs
     root = tmp_path_factory.mktemp("lake2")
     first = pages_df.limit(60)
     pipe1 = KgPipeline(spark, str(root), extractor, run_id="crawl1")
     res1 = pipe1.run(first, alias_df)
     assert res1.alias_components == {"version": 1, "built": True}
-    assert len(cc_calls) == 1
+    assert len(cc_calls) == 1 and len(key_calls) == 1
 
     pipe2 = KgPipeline(spark, str(root), extractor, run_id="crawl2")
     res2 = pipe2.run(pages_df, alias_df)  # includes the first 60 again
     assert not res2.stages_skipped
     assert res2.alias_components == {"version": 1, "built": False}
-    assert len(cc_calls) == 1  # the second crawl ran no CC
+    assert len(cc_calls) == 1  # the second crawl ran no CC ...
+    assert len(key_calls) == 1  # ... and no Python over the dictionary
     assert {"alias_components", "kg_triples", "kg_entities"} <= set(res1.wall_s)
     assert {"kg_triples", "kg_entities"} <= set(res2.wall_s)
     assert "alias_components" not in res2.wall_s
@@ -150,6 +164,22 @@ def test_alias_components_versioned_by_dictionary_and_tokenizer(
                           with_encoder=False)
     pipe_short = KgPipeline(spark, lake, short, run_id="d2")
     assert pipe_short.alias_components(changed)[1] == {"version": 3, "built": True}
+
+
+def test_alias_components_carry_rank1_link_candidates(one_crawl, corpus_dfs):
+    """The dimension's link columns are alias_dim_with_key's rank-1
+    rows: the candidates link_triples joins against."""
+    from deepie_spark.operators.linking import alias_dim_with_key
+
+    _pages, _gold, alias_df = corpus_dfs
+    cols = ["norm_key", "canonical_id", "entity_type"]
+    got = one_crawl.lake.read("alias_components").select(*cols).collect()
+    want = (
+        alias_dim_with_key(alias_df, one_crawl.extractor_bc)
+        .where(F.col("link_rank") == 1).select(*cols).collect()
+    )
+    assert len(got) == len(want) > 0
+    assert sorted(got) == sorted(want)
 
 
 def test_entities_table_clusters(one_crawl):

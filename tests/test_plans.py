@@ -205,8 +205,9 @@ def test_entity_clusters_broadcasts_alias_components(spark, extractor, tmp_path)
         [(1, 1, 7)], "node bigint, component bigint, cluster_canonical_id bigint"
     ).write.parquet(path)
     linked = spark.createDataFrame(
-        [("Ada Lovelace", {"@value": "1815"})],
-        "subject string, object map<string,string>",
+        [("Ada Lovelace", {"@value": "1815"}, "ada lovelace", "1815")],
+        "subject string, object map<string,string>, subject_norm string, "
+        "object_norm string",
     )
     bc = spark.sparkContext.broadcast(extractor)
     # alias_dim is not read when the dimension is given
@@ -214,3 +215,32 @@ def test_entity_clusters_broadcasts_alias_components(spark, extractor, tmp_path)
         linked, None, bc, components=spark.read.parquet(path)))
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
+
+
+def test_pipeline_python_task_budget(spark, extractor, tmp_path, monkeypatch):
+    """Each crawl stage runs at most one Python pass: ``triples`` is one
+    MapInPandas over the tokens stage with no exchange, ``linked`` has
+    one Python node and no shuffle join, ``entity_clusters`` none."""
+    from deepie_spark.plans.pipeline import KgPipeline
+    from deepie_spark.sources.lakehouse import Lakehouse
+
+    plans = {}
+    real_write = Lakehouse.write_stage
+
+    def spy(self, df, name, *a, **kw):
+        plans.setdefault(name, df._jdf.queryExecution().executedPlan().toString())
+        return real_write(self, df, name, *a, **kw)
+
+    monkeypatch.setattr(Lakehouse, "write_stage", spy)
+    pages_df, _, alias_df = corpus_dataframes(spark, 20)
+    KgPipeline(spark, str(tmp_path / "lake"), extractor).run(pages_df, alias_df)
+
+    def python_nodes(p):
+        return sum(p.count(n) for n in ("MapInPandas", "ArrowEvalPython",
+                                        "BatchEvalPython"))
+
+    assert "Exchange" not in plans["triples"], plans["triples"]
+    assert plans["triples"].count("MapInPandas") == 1, plans["triples"]
+    assert python_nodes(plans["linked"]) == 1, plans["linked"]
+    assert "SortMergeJoin" not in plans["linked"], plans["linked"]
+    assert python_nodes(plans["entity_clusters"]) == 0, plans["entity_clusters"]
